@@ -445,7 +445,7 @@ object Bench {
     // Initial width only; sizeShuffle re-sets it per staged dataset below
     // (the data-proportional rule), and SPARK_GRAFT_SHUFFLE pins it.
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8")
-    val spark = SparkSession.builder()
+    val spark = Graft.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffle)
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",

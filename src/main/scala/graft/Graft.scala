@@ -22,10 +22,29 @@ object Graft {
     */
   val scratchDir: String = sys.env.getOrElse("GRAFT_SCRATCH", "/tmp/graft_fixtures")
 
+  /** Entries in Spark's generated-class cache (`CodeGenerator`'s Janino
+    * cache, Spark default 100). The engine's working set is larger: the
+    * headline ten compile 82–104 classes per round and the pipeline
+    * operators 91–112, so with round-robin queries the default LRU hits 0%
+    * and every warm pass re-compiles (and HotSpot re-JITs) each class. 1000
+    * holds the working set with room to spare (CHANGES.md has the
+    * interleaved A/B, peak RSS included). The cache is built ONCE per JVM,
+    * by the first codegen, from the conf active at that moment — so this
+    * must be in the SparkConf before the first query runs (see
+    * [[builder]]); `spark.conf.set` later is a no-op.
+    */
+  val CodegenCacheEntries: Int = 1000
+
+  /** `SparkSession.builder()` carrying the engine's static confs — the
+    * base of [[session]] and of the driver mains that build their own
+    * session (Verify, Bench).
+    */
+  def builder(): SparkSession.Builder = SparkSession.builder()
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+
   /** Build (or reuse) a session with engine defaults. */
   def session(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
-    val spark = SparkSession
-      .builder()
+    val spark = builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

@@ -1179,12 +1179,14 @@ object Lab {
           None
       }
     // QUERY-MAJOR timing (the Bench protocol: warm, then min of 3
-    // consecutive runs), NOT the variant-A/B interleave: 20 distinct
-    // plans exceed Spark's ~100-entry codegen class cache, so a
-    // round-major sweep re-janino-compiles evicted units inside every
-    // timed run (+2-3× measured) — consecutive runs always hit the
-    // freshly compiled classes, which is also exactly how Bench measures
-    // the real numbers these floors are subtracted from.
+    // consecutive runs), NOT the variant-A/B interleave. The reason was
+    // Spark's default 100-entry codegen class cache, which 20 distinct
+    // plans overflowed, so a round-major sweep re-janino-compiled evicted
+    // units inside every timed run (+2-3× measured). Engine sessions
+    // (Graft.builder) now size that cache to hold the working set
+    // (Graft.CodegenCacheEntries); this session still uses Spark's
+    // default, and the protocol is kept because it is exactly how Bench
+    // measures the real numbers these floors are subtracted from.
     def minOf(n: String, dir: String): Option[Double] = {
       runOne(n, dir)
       (1 to 3).flatMap(_ => runOne(n, dir)) match {

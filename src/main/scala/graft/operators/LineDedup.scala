@@ -29,6 +29,14 @@ object LineDedup {
     * a periodically-recomputed static artifact that incremental/streaming
     * cleaning (d17) joins against — the df table LAGS the stream, exactly
     * as CCNet's hash tables do.
+    *
+    * Precondition: `doc_id` is unique per input row. df counts the input
+    * ROWS that contain a line, which equals the number of distinct
+    * documents only under that precondition; a doc_id repeated across rows
+    * would inflate the df of its lines and could drop a line at the tau
+    * boundary. Every caller passes a keyed table (documents by doc_id,
+    * crawl records by rec_id), so no defensive dedup (an extra exchange)
+    * is planned.
     */
   def lineDf(docs: DataFrame): DataFrame = withLinesOf(docs)
     // r19 (guide §2.3): the per-document dedup happens SCAN-LOCALLY — a
@@ -40,7 +48,8 @@ object LineDedup {
     .groupBy("line")
     .agg(count(lit(1)).as("df"))
 
-  /** @param docs (doc_id, content) where content is '\n'-separated text;
+  /** @param docs (doc_id, content) where content is '\n'-separated text,
+    *             one row per doc_id (the [[lineDf]] precondition);
     *             a NULL content row yields (n_lines 0, n_kept 0, "") rather
     *             than legacy size(NULL) = -1 nonsense
     * @return (doc_id, n_lines, n_kept, cleaned) — unordered; callers sort

@@ -29,6 +29,37 @@ object Streaming extends QueryBlock {
   private def duckHexB(off: Int): String =
     s"(strpos('123456789ABCDEF', substr(H, ${2 * off - 1}, 1))*16 + strpos('123456789ABCDEF', substr(H, ${2 * off}, 1)))"
 
+  /** Split `df` on its INT column `b` into one parquet file per value in
+    * [0, n) — `dst(i)`, stamped with mtime `mtimeMs(i)` so the file source
+    * reads them in order, one per trigger. ONE partitioned write job
+    * (coalesce(1) + partitionBy; the `b` column is excluded from the data
+    * files, so each file carries the other columns in their order). A
+    * value with no rows gets no `b=i` directory from partitionBy; it gets
+    * an empty, schema-bearing file instead, so the stream still sees `n`
+    * files. `tmp` is deleted afterwards.
+    */
+  private[graft] def writeSplitFiles(df: DataFrame, n: Int, tmp: String)(
+      dst: Int => java.nio.file.Path, mtimeMs: Int => Long): Unit = {
+    import scala.jdk.CollectionConverters._
+    def parquetIn(d: String): Option[java.io.File] =
+      Option(new java.io.File(d).listFiles()).getOrElse(Array.empty[java.io.File])
+        .find(_.getName.endsWith(".parquet"))
+    df.coalesce(1).write.partitionBy("b").mode("overwrite").parquet(tmp)
+    (0 until n).foreach { i =>
+      val part = parquetIn(s"$tmp/b=$i").getOrElse {
+        // limit(0) plans an empty relation: no scan, one metadata-only file
+        df.drop("b").limit(0).write.mode("overwrite").parquet(s"$tmp/empty$i")
+        parquetIn(s"$tmp/empty$i").get
+      }
+      java.nio.file.Files.move(part.toPath, dst(i),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      java.nio.file.Files.setLastModifiedTime(dst(i),
+        java.nio.file.attribute.FileTime.fromMillis(mtimeMs(i)))
+    }
+    java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator().asScala.toSeq.reverse
+      .foreach(p => java.nio.file.Files.deleteIfExists(p))
+  }
+
   val queries: Map[String, QueryDef] = Map(
     // D1 — file stream source scan: per-type counts of the full stream.
     "d01_stream_scan" -> QueryDef(
@@ -149,34 +180,16 @@ object Streaming extends QueryBlock {
           // surviving window; the flush window [10:30,10:31) never emits
           Seq((999999L, ts(30, 0), "flush")))
         // r19 (VERDICT r18 item 5): ONE partitioned write job instead of
-        // four single-batch write jobs — coalesce(1) + partitionBy splits
-        // the same rows into one file per batch in a single pass (the
-        // partition column is excluded from the data files, so each
-        // b<i>.parquet carries exactly the columns and rows it did before,
-        // in the same order). The mtime staggering below is unchanged.
-        val tmp = s"$base/_tmp"
-        batches.zipWithIndex.flatMap { case (specs, i) =>
+        // four single-batch write jobs (writeSplitFiles). Explicit mtimes:
+        // the file source orders batches by mtime, and sequential writes
+        // can collide at ms resolution.
+        writeSplitFiles(batches.zipWithIndex.flatMap { case (specs, i) =>
           users.flatMap(u => rows(u, specs)).map { case (id, t, u2, et, v, p) =>
             (i, id, t, u2, et, v, p) }
-        }.toDF("b", "event_id", "ts", "user_id", "event_type", "value", "props")
-          .coalesce(1).write.partitionBy("b").mode("overwrite").parquet(tmp)
-        batches.indices.foreach { i =>
-          val part = new java.io.File(s"$tmp/b=$i").listFiles()
-            .filter(_.getName.endsWith(".parquet")).head
-          val dst = java.nio.file.Paths.get(s"$base/b$i.parquet")
-          java.nio.file.Files.move(part.toPath, dst,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          // explicit mtimes: the file source orders batches by mtime, and
-          // sequential writes can collide at ms resolution
-          java.nio.file.Files.setLastModifiedTime(dst,
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 5000L))
-        }
-        locally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator()
-            .asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+        }.toDF("b", "event_id", "ts", "user_id", "event_type", "value", "props"),
+          batches.size, s"$base/_tmp")(
+          i => java.nio.file.Paths.get(s"$base/b$i.parquet"),
+          i => 1700000000000L + i * 5000L)
         val stream = s.readStream
           .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING")
           .option("maxFilesPerTrigger", "1")
@@ -380,8 +393,11 @@ object Streaming extends QueryBlock {
         // from a full char_trigrams explode (the e33 fix's streaming twin).
         val model = trisBatch.groupBy(col("tri")).agg(count(lit(1)).as("cnt"))
           .localCheckpoint()
-        val total: Double = model.agg(sum(col("cnt")))
-          .collect()(0).getLong(0).toDouble
+        // an empty corpus sums to NULL: no model, no stream rows either
+        val total: Double = {
+          val r = model.agg(sum(col("cnt"))).collect()(0)
+          if (r.isNullAt(0)) 0.0 else r.getLong(0).toDouble
+        }
         val stream = EventStreams.documents(s, dir)
           .filter(col("text").isNotNull)
           .select(col("doc_id"), lower(col("text")).as("t"))
@@ -437,7 +453,12 @@ object Streaming extends QueryBlock {
           java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
             .foreach(p => java.nio.file.Files.deleteIfExists(p))
         }
-        s.read.parquet(outDir.toString)
+        // no trigger wrote (zero update rows): outDir was never created
+        val updates =
+          if (java.nio.file.Files.exists(outDir)) s.read.parquet(outDir.toString)
+          else s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+            stream.schema)
+        updates
           .groupBy(col("doc_id"), col("tri"))
           .agg(max(col("k")).as("k"), min(col("l")).as("l"))
           .select(col("doc_id"), col("k"),
@@ -1004,27 +1025,13 @@ object Streaming extends QueryBlock {
         fd.mkdirs()
         // r19 (VERDICT r18 item 5): ONE partitioned write job instead of
         // four range-filtered scan+write jobs — the same doc_id ranges
-        // land as one file per range via partitionBy (the range column is
-        // excluded from the data files, so each f<i>.parquet carries
-        // exactly the (doc_id, source, text) rows of its range, in scan
-        // order as before). The mtime staggering is unchanged.
-        val tmp = s"$fixDir/_tmp"
-        docs.withColumn("b", expr(s"CAST(doc_id DIV $w AS INT)"))
-          .coalesce(1).write.partitionBy("b").mode("overwrite").parquet(tmp)
-        (0 until 4).foreach { i =>
-          val part = new java.io.File(s"$tmp/b=$i").listFiles()
-            .find(_.getName.endsWith(".parquet")).get
-          val dst = new java.io.File(s"$fixDir/f$i.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          dst.setLastModified(1700000000000L + i * 60000L)
-        }
-        locally {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(java.nio.file.Paths.get(tmp)).iterator()
-            .asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-        }
+        // land as one file per range (writeSplitFiles; an empty range
+        // becomes an empty file), each f<i>.parquet carrying exactly the
+        // (doc_id, source, text) rows of its range, in scan order.
+        writeSplitFiles(docs.withColumn("b", expr(s"CAST(doc_id DIV $w AS INT)")),
+          4, s"$fixDir/_tmp")(
+          i => java.nio.file.Paths.get(s"$fixDir/f$i.parquet"),
+          i => 1700000000000L + i * 60000L)
         val typed = s.readStream
           .schema("doc_id LONG, source STRING, text STRING")
           .option("maxFilesPerTrigger", "1")
