@@ -448,20 +448,11 @@ object Bench {
     val spark = Graft.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PFIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
-      // scan granularity stays at the 128m default: Lab's in-session
-      // A/B reads mp16 ~9% faster on c14 at sf1 (385.5 vs 422.7 ms —
-      // the single-file 165MB lineitem only splits into 2 tasks at
-      // 128m), but a full r17 gate run at 16m DOUBLED the sf10 side
-      // (19.6s vs ~10s: ~100 scan tasks per query across the suite).
-      // Env knob kept for future experiments.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAXPART", "128m"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPENCOST", "4194304"))
+      // scan granularity stays at Spark's 128m maxPartitionBytes default:
+      // an in-session A/B read 16m ~9% faster on c14 at sf1 (385.5 vs
+      // 422.7 ms — the single-file 165MB lineitem only splits into 2
+      // tasks at 128m), but a full r17 gate run at 16m DOUBLED the sf10
+      // side (19.6s vs ~10s: ~100 scan tasks per query; NOTES_r17).
       .config("spark.sql.session.timeZone", "UTC")
       // AQE stays ON in engine defaults (Graft.session) — it is the 100 TB
       // skew/coalesce safety net, and with a fair interleaved warm-up it is

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The committed clustered-embedding corpus behind the driver-gated ANN
-  * recall row (`e28d_ann_recall`) and AnnReport's production-shape tables
-  * (VERDICT r6 item 4): 50 well-separated Gaussian clusters × 40 members
-  * in 64 dims — same row count and dim as the sf0.1 embeddings table, but
-  * with the structure real embedding spaces have (within-cluster cosine
+  * recall row (`e28d_ann_recall`) and the `IvfAnnSpec` recall gates
+  * (VERDICT r6 item 4; the measured tables are in NOTES_r6): 50
+  * well-separated Gaussian clusters × 40 members in 64 dims — same row
+  * count and dim as the sf0.1 embeddings table, but with the structure real embedding spaces have (within-cluster cosine
   * ≈ 0.999, cross-cluster near 0), so "the true top-10" is an unambiguous
   * set and recall gates can be tight.
   *
@@ -26,7 +26,7 @@ object ClusteredFixture {
 
   /** (vec_id, embedding); vec_id = cluster * members + m. Generation
     * order (all centers first, then members cluster-major) matches the
-    * committed file and the r6 AnnReport corpus.
+    * committed file and the NOTES_r6 corpus.
     */
   def vectors: Array[(Long, Array[Float])] = {
     val rnd = new scala.util.Random(20260813L)
@@ -46,9 +46,7 @@ object ClusteredFixture {
     * the fixtures/<sf> layout, no _SUCCESS/crc dir noise).
     */
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session("local[4]")
     val tmp = path + ".tmp"
     df(spark).coalesce(1).sortWithinPartitions("vec_id")
       .write.mode("overwrite").parquet(tmp)

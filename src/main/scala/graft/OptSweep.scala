@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement harness (dev tool, not part of the driver
   * contract — the guide's "measure first" step applied to the FULL declared
   * query surface, not just the bench headline set).
@@ -19,15 +17,8 @@ object OptSweep {
     val prefix = args.drop(1).headOption.getOrElse("")
     System.setProperty("graft.sf.name", new java.io.File(sfDir).getName)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", shufflePartitions = cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    Graft.prepare(spark)
     val names = SparkEntry.queries.keys.toSeq.sorted.filter(_.startsWith(prefix))
     def timeOne(name: String): Double = {
       spark.sparkContext.setJobDescription(s"sweep: $name")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Regenerates PLANS.md: the formatted physical plan of every headline
@@ -10,14 +9,9 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session("local[8]", shufflePartitions = 8)
+    spark.conf.set("spark.sql.adaptive.enabled", "false") // static plans
     spark.sparkContext.setLogLevel("ERROR")
-    Graft.prepare(spark)
     val sb = new StringBuilder
     sb.append("# PLANS — headline query physical plans (sf0.1, static planning)\n\n")
     sb.append("Generated by `sbt \"runMain graft.PlanDump\"`. What to look for per\n")

@@ -67,14 +67,8 @@ object Stress {
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32") // sized for the 10x volume
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.prepare(spark)
+    // 32 shuffle partitions: sized for the 10x volume
+    val spark = Graft.session(s"local[$cpus]", shufflePartitions = 32)
 
     build(spark, "/root/testdata/sf0.1")
 

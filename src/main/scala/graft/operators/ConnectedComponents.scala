@@ -113,9 +113,10 @@ object ConnectedComponents {
   // too: smallStar's per-group minimum is duplicate-insensitive and the
   // round's final distinct canonicalizes, so each round's edge SET — and
   // therefore the convergence round and the final labels — is unchanged
-  // (CC spec pins union-find equivalence; CcPlan A/Bs the full legacy loop
-  // against this one on the real e18 edges; e18/e64 oracles pin the
-  // end-to-end labels). 6 exchanges/round → 3. The window buffers one
+  // (CC spec pins union-find equivalence; OPTIMIZATION_r19 has the A/B of
+  // the full legacy loop against this one on the real e18 edges, and
+  // plans/r19 the per-round plans; e18/e64 oracles pin the end-to-end
+  // labels). 6 exchanges/round → 3. The window buffers one
   // vertex's neighbor rows per group (spillable array) — unlike a
   // collect_list fusion it never builds a single giant row for a hot
   // vertex.

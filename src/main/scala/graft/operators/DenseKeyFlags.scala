@@ -65,8 +65,9 @@ object DenseKeyFlags {
   final case class FlagBits(part: Array[Long], disc: Array[Long],
       taxed: Array[Long])
 
-  /** (key, mask) tuple-encoder form — kept for the Lab's encoder-cost
-    * attribution rows; the shipping path is [[DensePackedAgg]].
+  /** (key, mask) tuple-encoder form: the inner aggregator that
+    * [[DensePackedAgg]] (the shipping path) decodes into; DenseKeyFlagsSpec
+    * pins it against a hand-computed verdict.
     */
   final class DenseFlagAgg(words: Int)
       extends Aggregator[(Long, Int), FlagBits, Long] {

@@ -137,7 +137,7 @@ object ProductQuantizer {
     * (Jégou et al., "Product quantization for nearest neighbor search",
     * IEEE TPAMI 2011: IVFADC with re-ranking). PQ codes at m=8/k=16
     * resolution collapse a tight cluster to ONE code, so raw ADC cannot
-    * rank within it (AnnReport: recall@10 plateaus at ~0.3 on clustered
+    * rank within it (NOTES_r6: recall@10 plateaus at ~0.3 on clustered
     * corpora); re-ranking the top-`shortlist` ADC candidates by exact
     * cosine restores recall ~1.0 while reading only `shortlist` full
     * vectors instead of the corpus.

@@ -34,20 +34,6 @@ object Av1Decoder {
     * or -1 to keep the computed one. Never set in production paths. */
   @volatile private[av1] var psplitOverride: (Int, Int, Int) => Int = null
 
-  /** dev drill env (GRAFT_AV1_TXCTX_OVR="r,c,ctx"): force one block's
-    * tx-depth context (adapted-row audit) */
-  private[av1] val TxCtxOvr: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_TXCTX_OVR")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  /** dev drill env (GRAFT_AV1_TXROW_PATCH="r,c,v0[,v1]"): patch the
-    * tx-depth cdf row content just before one block's read */
-  private[av1] val TxRowPatch: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_TXROW_PATCH")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
   /** Dev-only drill hook: called after each block's reconstruction with
     * (state, miRow, miCol, bSize, filterIntraMode [-1 if unused]). A
     * harness can overwrite the block's reconstructed pixels with
@@ -878,19 +864,8 @@ final class Av1FrameDecode(val seq: Av1Headers.Seq, val fh: Av1Headers.Frame) {
           if (availU(r, c)) TxW(txSzY((r - 1) * miCols + c)) else 0
         val leftH =
           if (availL(r, c)) TxH(txSzY(r * miCols + c - 1)) else 0
-        var ctx = (if (aboveW >= maxTxWide) 1 else 0) +
+        val ctx = (if (aboveW >= maxTxWide) 1 else 0) +
           (if (leftH >= maxTxHigh) 1 else 0)
-        // dev drill: force the tx-depth ctx of one block (row audit)
-        if (Av1Decoder.TxCtxOvr != null && r == Av1Decoder.TxCtxOvr(0) &&
-          c == Av1Decoder.TxCtxOvr(1)) ctx = Av1Decoder.TxCtxOvr(2)
-        // dev drill: patch the tx-depth row content before one read
-        if (Av1Decoder.TxRowPatch != null && r == Av1Decoder.TxRowPatch(0) &&
-          c == Av1Decoder.TxRowPatch(1)) {
-          val row =
-            if (cat == 0) cdf.txDepthCat0(ctx) else cdf.txDepth((cat - 1) * 3 + ctx)
-          row(0) = Av1Decoder.TxRowPatch(2)
-          if (Av1Decoder.TxRowPatch.length > 3) row(1) = Av1Decoder.TxRowPatch(3)
-        }
         val depth =
           if (cat == 0) msac.symbol(cdf.txDepthCat0(ctx), 2)
           else msac.symbol(cdf.txDepth((cat - 1) * 3 + ctx), 3)

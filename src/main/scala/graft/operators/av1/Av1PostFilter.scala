@@ -38,7 +38,6 @@ object Av1LoopFilter {
         pw.println(d.planes(pl).mkString(","))
       pw.close()
     }
-    if (System.getenv("GRAFT_AV1_NODEBLOCK") != null) return
     if (fh.lfLevel(0) == 0 && fh.lfLevel(1) == 0 &&
       fh.lfLevel(2) == 0 && fh.lfLevel(3) == 0) return
 
@@ -332,7 +331,6 @@ object Av1Cdef {
         pw.println(d.planes(pl).mkString(","))
       pw.close()
     }
-    if (System.getenv("GRAFT_AV1_NOCDEF") != null) return
     if (!d.seq.enableCdef || fh.codedLossless || fh.allowIntrabc) return
     var any = false
     var i = 0

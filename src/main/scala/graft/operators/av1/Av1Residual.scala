@@ -16,67 +16,6 @@ object Av1Residual {
     if (sd == null) null else sd.split(",").map(_.toInt)
   }
 
-  /** dev drill env (GRAFT_AV1_TXTYPE_OVR="plane,x,y,type"): force the
-    * tx type of one transform block to test mapping hypotheses */
-  private val TxTypeOvr: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_TXTYPE_OVR")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  /** dev drill env (GRAFT_AV1_CBPATCH="plane,x,y,scanC,idx,delta"):
-    * nudge one coeff_base cdf row entry before a chosen read */
-  private val CbPatch: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_CBPATCH")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  private val CbPatch2: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_CBPATCH2")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  /** dev drill env (GRAFT_AV1_CTXOVR="plane,x,y,delta[,minC,maxC]"):
-    * add delta to the computed coeff_base ctx for reads of one tx
-    * (optionally only scan indices minC..maxC) — emulates a reference
-    * whose base-ctx formula differs systematically */
-  private val CtxOvr: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_CTXOVR")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  /** dev drill env (GRAFT_AV1_DSMAP="neg,pos"): per-unit dc-sign
-    * score contributions (default the spec-symmetric -1/+1) */
-  private val DsMapNeg: Int = {
-    val sd = System.getenv("GRAFT_AV1_DSMAP")
-    if (sd == null) -1 else sd.split(",")(0).toInt
-  }
-  private val DsMapPos: Int = {
-    val sd = System.getenv("GRAFT_AV1_DSMAP")
-    if (sd == null) 1 else sd.split(",")(1).toInt
-  }
-
-  /** dev drill env (GRAFT_AV1_DSCTX="plane,x,y,ctx"): force the
-    * dc-sign context of one tx's read */
-  private val DsCtx: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_DSCTX")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  /** dev drill env (GRAFT_AV1_DSPATCH="plane,x,y,delta"): nudge the
-    * dc_sign cdf row entry 0 before one tx's dc-sign read */
-  private val DsPatch: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_DSPATCH")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
-  /** dev drill env (GRAFT_AV1_ROWPATCH="plane,x,y,idx,val[,...]"):
-    * overwrite entries of the tx-type cdf row just before the read at
-    * one tx site — emulates a reference whose adapted row drifted */
-  private val RowPatch: Array[Int] = {
-    val sd = System.getenv("GRAFT_AV1_ROWPATCH")
-    if (sd == null) null else sd.split(",").map(_.toInt)
-  }
-
   /** coeff_base 2D context position offsets (spec Coeff_Base_Ctx_Offset,
     * indexed [min(row,4)][min(col,4)])
     */
@@ -511,17 +450,6 @@ object Av1Residual {
         val set = intraTxSet(txSz, d.fh.reducedTxSet)
         if (set > 0 && d.currentQIndex > 0) {
           val sqr = TxSizeSqr(txSz)
-          if (RowPatch != null && plane == RowPatch(0) && x == RowPatch(1) &&
-            y == RowPatch(2)) {
-            val row =
-              if (set == 1) cdf.txtpSet1(sqr * 13 + yMode)
-              else cdf.txtpSet2(sqr * 13 + yMode)
-            var i = 3
-            while (i + 1 < RowPatch.length) {
-              row(RowPatch(i)) += RowPatch(i + 1)
-              i += 2
-            }
-          }
           if (msac.MarginTrace) msac.traceLabel = s"txType pl=$plane x=$x y=$y"
           txType =
             if (set == 1)
@@ -540,11 +468,6 @@ object Av1Residual {
             t == ADST_DCT || t == DCT_ADST || t == IDTX)) DCT_DCT
           else t
       }
-    }
-    if (TxTypeOvr != null && plane == TxTypeOvr(0) && x == TxTypeOvr(1) &&
-      y == TxTypeOvr(2)) {
-      d.tr(s"    TXTYPE OVERRIDE $txType -> ${TxTypeOvr(3)}")
-      txType = TxTypeOvr(3)
     }
     val cls = if (lossless) TX_CLASS_2D else txClass(txType)
 
@@ -606,23 +529,7 @@ object Av1Residual {
         // to a 32x32 coded square but keep their tall/wide base-ctx
         // offsets (the r18 10-bit drill: a 32x64 whole-tx block decoded
         // its (0,3) coefficient with the square table and desynced).
-        var ctx = baseCtx(levels, stride, row, col, pos, cls, w, h)
-        if (CtxOvr != null && plane == CtxOvr(0) && x == CtxOvr(1) &&
-          y == CtxOvr(2) &&
-          (CtxOvr.length < 6 || (c >= CtxOvr(4) && c <= CtxOvr(5))))
-          ctx = math.max(0, math.min(41, ctx + CtxOvr(3)))
-        // dev drill: nudge one coeff_base row entry just before a
-        // chosen read (adapted-row drift emulation)
-        if (CbPatch != null && plane == CbPatch(0) && x == CbPatch(1) &&
-          y == CbPatch(2) && c == CbPatch(3)) {
-          val rw = cdf.coeffBase(txpl(txSzCtx, ptype, 5) * 42 + ctx)
-          rw(CbPatch(4)) += CbPatch(5)
-        }
-        if (CbPatch2 != null && plane == CbPatch2(0) && x == CbPatch2(1) &&
-          y == CbPatch2(2) && c == CbPatch2(3)) {
-          val rw = cdf.coeffBase(txpl(txSzCtx, ptype, 5) * 42 + ctx)
-          rw(CbPatch2(4)) += CbPatch2(5)
-        }
+        val ctx = baseCtx(levels, stride, row, col, pos, cls, w, h)
         if (msac.MarginTrace) msac.traceLabel = s"base c=$c ctx=$ctx"
         level = msac.symbol(
           cdf.coeffBase(txpl(txSzCtx, ptype, 5) * 42 + ctx), 4)
@@ -668,13 +575,7 @@ object Av1Residual {
       if (level != 0) {
         var neg = false
         if (c == 0) {
-          var ctx = dcSignCtx(d, plane, x4, y4, w4, h4)
-          // dev drill: force one tx's dc-sign ctx
-          if (DsCtx != null && plane == DsCtx(0) && x == DsCtx(1) &&
-            y == DsCtx(2)) ctx = DsCtx(3)
-          // dev drill: nudge the dc_sign row before one tx's read
-          if (DsPatch != null && plane == DsPatch(0) && x == DsPatch(1) &&
-            y == DsPatch(2)) cdf.dcSign(ptype * 3 + ctx)(0) += DsPatch(3)
+          val ctx = dcSignCtx(d, plane, x4, y4, w4, h4)
           neg = msac.bool(cdf.dcSign(ptype * 3 + ctx))
         } else neg = msac.literal(1) == 1
         if (level > 14) level += msac.golomb()

@@ -582,7 +582,7 @@ object Relational extends QueryBlock {
     // 319→141→~105 ms at sf0.1; plan is HashAggregate end-to-end.
     // r9: the prefix pack is the FUSED pack_upper_ascii8 — one byte walk
     // replacing substring+upper+pack (two UTF8String allocations/row); the
-    // composed form stays as Lab's c27_composed for the paired measurement.
+    // paired measurement against the composed form is in NOTES_r9.
     "c27_strings" -> QueryDef(
       (s, dir) =>
         t(s, dir, "documents")
