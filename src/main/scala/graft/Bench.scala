@@ -193,10 +193,12 @@ object Bench {
   /** Shuffle width sized to the data, the scaling rule the brief states
     * outright ("size spark.sql.shuffle.partitions so partitions fit in
     * executor memory at the target SF"): one reduce task per ~8 MB of
-    * staged input, floored at 8 (below that the per-task scheduling floor
-    * dominates any parallelism gain — measured: the sf0.1 set runs ~15%
-    * faster at 8 than at 32) and capped at the session's core count
-    * (measured width curve for the biggest shuffle, c07 at sf1: 8→1.12 s,
+    * staged input, capped at the session's core count and then floored at
+    * 8 — `max(8, min(cores, mb / 8))`, so on fewer than 8 cores the floor
+    * wins and the 8 tasks run in more than one wave. The floor: below 8 the
+    * per-task scheduling floor dominates any parallelism gain (measured:
+    * the sf0.1 set runs ~15% faster at 8 than at 32). The cap (measured
+    * width curve for the biggest shuffle, c07 at sf1: 8→1.12 s,
     * 16→0.89, 32→0.83, 48→1.08, 64→1.15 — past one wave the extra map
     * outputs cost more than the reduce parallelism buys). On a real
     * cluster the same rule scales: bytes/target-partition-size, capped by

@@ -37,10 +37,12 @@ object Graft {
 
   /** `SparkSession.builder()` carrying the engine's static confs — the
     * base of [[session]] and of the driver mains that build their own
-    * session (Verify, Bench).
+    * session (Verify, Bench): the codegen cache size and the fork-free
+    * `file:` filesystem ([[LocalFs]]).
     */
   def builder(): SparkSession.Builder = SparkSession.builder()
     .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+    .config(LocalFs.Confs)
 
   /** Build (or reuse) a session with engine defaults. */
   def session(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {

@@ -8,6 +8,7 @@ import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.MetadataBuilder
+import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
 /** GeoParquet I/O (SURVEY.md §2 A1/A2): parquet files whose footer carries
@@ -206,8 +207,11 @@ object GeoParquet {
   def injectFooterInto(spark: SparkSession, path: String, geoJson: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val parts = listParquetFiles(new Path(path), conf)
+    // the tasks resolve paths with the session's Hadoop conf (spark.hadoop.*:
+    // filesystem impls, object-store credentials), not a bare Configuration
+    val shipped = new SerializableConfiguration(conf)
     spark.sparkContext.parallelize(parts, parts.length.max(1))
-      .foreach(injectFooter(_, geoJson))
+      .foreach(injectFooter(_, geoJson, shipped.value))
     invalidateMetadata(path)
   }
 
@@ -226,10 +230,9 @@ object GeoParquet {
   }
 
   /** Rewrite one parquet file with the `geo` footer key added (runs on an
-    * executor; local Configuration suffices for file/hdfs URIs it carries).
+    * executor, with the driver's Hadoop conf).
     */
-  private def injectFooter(file: String, geoJson: String): Unit = {
-    val conf = new Configuration()
+  private def injectFooter(file: String, geoJson: String, conf: Configuration): Unit = {
     val src = new Path(file)
     val tmp = new Path(file + ".geo.tmp")
     val bak = new Path(file + ".geo.bak")

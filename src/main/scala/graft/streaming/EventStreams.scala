@@ -26,14 +26,54 @@ object EventStreams {
 
   def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // The file stream source only accepts directories; stage the bounded
-    // events file into a per-sf scratch dir via symlink (an unbounded
-    // deployment would already have a directory of arriving files here).
+    val streamDir = stageDir("/tmp/graft_stream", dir, "events.parquet")
+    // Mirror Tables.scala's guard: raw testdata carries TIMESTAMP(NANOS)
+    // (read as long, truncated to µs); a re-staged copy already holds µs
+    // timestamps and must not be divided again.
+    val tsIsLong: Boolean = tsIsLongCache.computeIfAbsent(streamDir,
+      _ => s.read.parquet(streamDir).schema("ts").dataType ==
+        org.apache.spark.sql.types.LongType)
+    if (tsIsLong)
+      s.readStream
+        .schema("event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
+        .parquet(streamDir)
+        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    else
+      s.readStream
+        .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING")
+        .parquet(streamDir)
+  }
+
+  /** Streaming read of the documents table (same symlink staging as
+    * [[events]]; no timestamp column, so no ns handling needed). The text
+    * pipeline's streaming twin sources read from here.
+    */
+  def documents(s: SparkSession, dir: String): DataFrame =
+    s.readStream
+      .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
+      .parquet(stageDir("/tmp/graft_stream_docs", dir, "documents.parquet"))
+
+  /** Streaming read of the embeddings table (same symlink staging) — the
+    * ANN ingest path's streaming twin source: vectors arrive as files and
+    * index artifacts (bucket ids, PQ codes) are computed scan-locally as
+    * they land.
+    */
+  def embeddings(s: SparkSession, dir: String): DataFrame =
+    s.readStream
+      .schema("vec_id LONG, embedding ARRAY<FLOAT>, label INT")
+      .parquet(stageDir("/tmp/graft_stream_emb", dir, "embeddings.parquet"))
+
+  /** The file stream source only accepts directories; stage the bounded
+    * `dir/file` into a per-dir scratch dir under `root` via symlink (an
+    * unbounded deployment would already have a directory of arriving files
+    * here). Returns the staging dir.
+    */
+  private def stageDir(root: String, dir: String, file: String): String = {
     val streamDir = java.nio.file.Paths.get(
-      s"/tmp/graft_stream/${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
+      s"$root/${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
     java.nio.file.Files.createDirectories(streamDir)
-    val link = streamDir.resolve("events.parquet")
-    val target = java.nio.file.Paths.get(s"$dir/events.parquet")
+    val link = streamDir.resolve(file)
+    val target = java.nio.file.Paths.get(s"$dir/$file")
     // Validate, don't trust: the sanitized scratch key is lossy, and a
     // dangling/mistargeted link from an earlier dir must be recreated
     // (Files.exists follows links, so a dangling one reads as absent while
@@ -45,71 +85,14 @@ object EventStreams {
     if (!java.nio.file.Files.isSymbolicLink(link) &&
         !java.nio.file.Files.exists(link))
       java.nio.file.Files.createSymbolicLink(link, target)
-    // Mirror Tables.scala's guard: raw testdata carries TIMESTAMP(NANOS)
-    // (read as long, truncated to µs); a re-staged copy already holds µs
-    // timestamps and must not be divided again.
-    val tsIsLong: Boolean = tsIsLongCache.computeIfAbsent(streamDir.toString,
-      _ => s.read.parquet(streamDir.toString).schema("ts").dataType ==
-        org.apache.spark.sql.types.LongType)
-    if (tsIsLong)
-      s.readStream
-        .schema("event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
-        .parquet(streamDir.toString)
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else
-      s.readStream
-        .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING")
-        .parquet(streamDir.toString)
-  }
-
-  /** Streaming read of the documents table (same symlink staging as
-    * [[events]]; no timestamp column, so no ns handling needed). The text
-    * pipeline's streaming twin sources read from here.
-    */
-  def documents(s: SparkSession, dir: String): DataFrame = {
-    val streamDir = java.nio.file.Paths.get(
-      s"/tmp/graft_stream_docs/${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
-    java.nio.file.Files.createDirectories(streamDir)
-    val link = streamDir.resolve("documents.parquet")
-    val target = java.nio.file.Paths.get(s"$dir/documents.parquet")
-    if (java.nio.file.Files.isSymbolicLink(link)) {
-      if (java.nio.file.Files.readSymbolicLink(link) != target)
-        java.nio.file.Files.delete(link)
-    }
-    if (!java.nio.file.Files.isSymbolicLink(link) &&
-        !java.nio.file.Files.exists(link))
-      java.nio.file.Files.createSymbolicLink(link, target)
-    s.readStream
-      .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-      .parquet(streamDir.toString)
-  }
-
-  /** Streaming read of the embeddings table (same symlink staging) — the
-    * ANN ingest path's streaming twin source: vectors arrive as files and
-    * index artifacts (bucket ids, PQ codes) are computed scan-locally as
-    * they land.
-    */
-  def embeddings(s: SparkSession, dir: String): DataFrame = {
-    val streamDir = java.nio.file.Paths.get(
-      s"/tmp/graft_stream_emb/${dir.replaceAll("[^A-Za-z0-9.]", "_")}")
-    java.nio.file.Files.createDirectories(streamDir)
-    val link = streamDir.resolve("embeddings.parquet")
-    val target = java.nio.file.Paths.get(s"$dir/embeddings.parquet")
-    if (java.nio.file.Files.isSymbolicLink(link)) {
-      if (java.nio.file.Files.readSymbolicLink(link) != target)
-        java.nio.file.Files.delete(link)
-    }
-    if (!java.nio.file.Files.isSymbolicLink(link) &&
-        !java.nio.file.Files.exists(link))
-      java.nio.file.Files.createSymbolicLink(link, target)
-    s.readStream
-      .schema("vec_id LONG, embedding ARRAY<FLOAT>, label INT")
-      .parquet(streamDir.toString)
+    streamDir.toString
   }
 
   /** Data-proportional shuffle/state width for a streaming query — the
     * SAME rule as Bench.sizeShuffle (one reduce/state partition per ~8 MB
-    * of source input, floored at 8, capped at the session's cores),
+    * of source input, capped at the session's cores, then floored at 8 —
+    * `max(8, min(cores, mb / 8))`, so below 8 cores the floor wins and the
+    * width exceeds the core count),
     * derived from the streaming relations' source directories. r18
     * optimization (guide §2.2): every stateful trigger pays one task +
     * one state-store commit file PER state partition, so a

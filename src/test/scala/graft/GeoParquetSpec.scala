@@ -1,6 +1,7 @@
 package graft
 
 import graft.geo.{GeoColumnMeta, GeoParquet, GeoParquetMetadata}
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -153,6 +154,25 @@ class GeoParquetSpec extends AnyFunSuite {
     assert(GeoParquet.read(spark, out).count() === 20)
   }
 
+  test("statsFromWritten: the footer retrofit uses the session's Hadoop conf") {
+    // `gtest:` exists only in the session's conf, as object-store schemes
+    // and credentials do: a task that builds its own Configuration cannot
+    // resolve it. Uncached, so the tasks (which share this JVM in local
+    // mode) cannot pick up the driver's instance either.
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    hadoopConf.set("fs.gtest.impl", classOf[SessionOnlyFileSystem].getName)
+    hadoopConf.setBoolean("fs.gtest.impl.disable.cache", true)
+    try {
+      val out = s"gtest:${java.nio.file.Files.createTempDirectory("graft_gtest")}/geo"
+      val df = spark.range(20).toDF("id")
+        .select(col("id"), GeoFunctions.st_point(col("id").cast("double"), lit(1.0)).as("geometry"))
+      GeoParquet.write(df, out, Seq("geometry"), statsFromWritten = true)
+      val meta = GeoParquet.readMetadata(spark, out)
+      assert(meta.flatMap(_.columns("geometry").bbox) === Some((0.0, 1.0, 19.0, 1.0)))
+      assert(GeoParquet.read(spark, out).count() === 20)
+    } finally Seq("fs.gtest.impl", "fs.gtest.impl.disable.cache").foreach(hadoopConf.unset)
+  }
+
   test("injectFooterInto retrofits a geo footer onto plain parquet") {
     val out = "/tmp/graft_test/geo_retrofit"
     spark.range(10).toDF("id")
@@ -178,4 +198,17 @@ class GeoParquetSpec extends AnyFunSuite {
     assert(plan.contains("PushedFilters: [IsNotNull(id), GreaterThan(id,990)]"))
     assert(spark.read.parquet(out).filter(col("id") > 990).count() === 9)
   }
+}
+
+/** The local filesystem under a scheme no bare `Configuration` knows.
+  * Statuses are plain: Hadoop's lazy local status loads permissions back
+  * through a `file:` URI, which a `gtest:` path is not.
+  */
+class SessionOnlyFileSystem extends RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("gtest:///")
+  override def getScheme: String = "gtest"
+  override def getFileStatus(f: Path): FileStatus = plain(super.getFileStatus(f))
+  override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(plain)
+  private def plain(st: FileStatus) = new FileStatus(st.getLen, st.isDirectory,
+    st.getReplication, st.getBlockSize, st.getModificationTime, st.getPath)
 }
